@@ -41,17 +41,6 @@ def dot_q(a: Column, b: Column) -> Column:
     )
 
 
-def norm_sq_q(a: Column) -> Column:
-    return dot_q(a, a)
-
-
-def cosine_q(a: Column, b: Column) -> Column:
-    """Cosine over quantized vectors: exact-int dot / sqrt(na)·sqrt(nb)."""
-    return dot_q(a, b).cast("double") / (
-        F.sqrt(norm_sq_q(a).cast("double")) * F.sqrt(norm_sq_q(b).cast("double"))
-    )
-
-
 def _collect_query_matrix(queries: DataFrame):
     """Collect (query_id, qvec) into sorted numpy arrays.  The query
     set is broadcast-sized by contract (Q ≪ N — the same assumption a

@@ -14,8 +14,9 @@ mandates).
              weighted domain mixing → greedy sequence packing
 
 Every stage writes a parquet table under its layer, records a
-STARTED → SUCCESS(rows)/FAILED(error) audit pair, and re-raises on
-failure so downstream stages never run on partial data.  Stage order
+STARTED → SUCCESS(rows)/FAILED(error) audit pair — rows counted by the
+write job itself (``pipeline.store``) — and re-raises on failure so
+downstream stages never run on partial data.  Stage order
 is dependency order (C2); each stage reads the PREVIOUS stage's table
 from disk, so a crashed run resumes from the last good layer.
 
@@ -45,7 +46,7 @@ from olist_ecommerce_data_warehouse_spark.operators.textdedup import (
     shingle_hash_table,
     token_hashes_expr,
 )
-from olist_ecommerce_data_warehouse_spark.sources.audit import AuditLog
+from olist_ecommerce_data_warehouse_spark.pipeline.store import LayerStore
 from olist_ecommerce_data_warehouse_spark.sources.jsonl import read_jsonl, split_corrupt
 from olist_ecommerce_data_warehouse_spark.streaming.packing import greedy_pack_batch
 
@@ -75,7 +76,7 @@ def _split_col(id_col: str = "doc_id") -> F.Column:
     )
 
 
-class CorpusPipeline:
+class CorpusPipeline(LayerStore):
     def __init__(
         self,
         spark: SparkSession,
@@ -87,9 +88,7 @@ class CorpusPipeline:
         contam_threshold_pct: int = 50,
         seq_budget: int = 512,
     ):
-        self.spark = spark
-        self.base = base_dir.rstrip("/")
-        self.audit = AuditLog(spark)
+        super().__init__(spark, base_dir)
         self.min_tokens = min_tokens
         self.max_tokens = max_tokens
         self.jaccard_threshold = jaccard_threshold
@@ -98,9 +97,6 @@ class CorpusPipeline:
 
     # ------------------------------------------------------------ plumbing
 
-    def path(self, layer: str, name: str) -> str:
-        return f"{self.base}/{layer}/{name}"
-
     def read(self, layer: str, name: str) -> DataFrame:
         # silver/filtered and silver/rejected are partition-pruned
         # VIEWS of the single-pass silver/gated write (round 5): the
@@ -108,51 +104,29 @@ class CorpusPipeline:
         # filter, and both logical datasets keep their pre-round-5
         # schemas (rejected carries reject_reason, filtered doesn't).
         if (layer, name) == ("silver", "filtered"):
-            return (
-                self.spark.read.parquet(self.path("silver", "gated"))
-                .filter(F.col("gate") == "keep")
-                .drop("gate")
-            )
+            return super().read("silver", "gated").filter(F.col("gate") == "keep").drop("gate")
         if (layer, name) == ("silver", "rejected"):
             return (
-                self.spark.read.parquet(self.path("silver", "gated"))
+                super().read("silver", "gated")
                 .filter(F.col("gate") != "keep")
                 .withColumn("reject_reason", F.col("gate"))
                 .drop("gate")
             )
-        return self.spark.read.parquet(self.path(layer, name))
-
-    def _audited_write(
-        self, df: DataFrame, layer: str, name: str, source_object: str = ""
-    ) -> int:
-        run_id, started = self.audit.start_run(source_object or name, layer, name)
-        try:
-            df.write.mode("overwrite").parquet(self.path(layer, name))
-            n = self.spark.read.parquet(self.path(layer, name)).count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return n
+        return super().read(layer, name)
 
     # -------------------------------------------------------------- bronze
 
     def ingest_bronze(self, jsonl_path: str) -> dict[str, int]:
         """JSONL → bronze/documents (+ bronze/quarantine for corrupt
-        lines — quarantined WITH their raw text, never dropped)."""
-        run_id, started = self.audit.start_run(jsonl_path, "bronze", "documents", source_path=jsonl_path)
-        try:
-            raw = read_jsonl(self.spark, jsonl_path, DOC_SCHEMA)
-            clean, corrupt = split_corrupt(raw)
-            clean.write.mode("overwrite").parquet(self.path("bronze", "documents"))
-            corrupt.write.mode("overwrite").parquet(self.path("bronze", "quarantine"))
-            n = self.read("bronze", "documents").count()
-            nq = self.read("bronze", "quarantine").count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return {"documents": n, "quarantined": nq}
+        lines — quarantined WITH their raw text, never dropped).  Each
+        of the two tables gets its own audit row."""
+        with self.audit.run(jsonl_path, "bronze", "documents", source_path=jsonl_path) as run:
+            clean, corrupt = split_corrupt(read_jsonl(self.spark, jsonl_path, DOC_SCHEMA))
+            run.rows = self.write(clean, "bronze", "documents")["rows"]
+        n = run.rows
+        with self.audit.run(jsonl_path, "bronze", "quarantine", source_path=jsonl_path) as run:
+            run.rows = self.write(corrupt, "bronze", "quarantine")["rows"]
+        return {"documents": n, "quarantined": run.rows}
 
     def ingest_bronze_df(self, docs: DataFrame) -> dict[str, int]:
         """Bronze from an in-engine frame (parquet-sourced corpora —
@@ -190,33 +164,20 @@ class CorpusPipeline:
         partition-pruned views of that single write (see :meth:`read`).
         Rejected docs keep their reject_reason — a filter you cannot
         audit is a filter you cannot trust."""
-        flagged = self._apply_gates(self.read("bronze", "documents"))
-        run_id, started = self.audit.start_run("bronze/documents", "silver", "gated")
-        try:
-            (
-                flagged.withColumn(
-                    "gate", F.coalesce(F.col("reject_reason"), F.lit("keep"))
-                )
-                .drop("reject_reason")
-                .write.mode("overwrite")
-                .partitionBy("gate")
-                .parquet(self.path("silver", "gated"))
+        gated = (
+            self._apply_gates(self.read("bronze", "documents"))
+            .withColumn("gate", F.coalesce(F.col("reject_reason"), F.lit("keep")))
+            .drop("reject_reason")
+        )
+        with self.audit.run("bronze/documents", "silver", "gated") as run:
+            # the total and the keep count come from the write's own
+            # observation — no recompute of the gates, no re-read
+            counts = self.write(
+                gated, "silver", "gated", partition_by=["gate"],
+                keep=F.count_if(F.col("gate") == "keep"),
             )
-            # one count over the WRITTEN files, split by the partition
-            # column — no recompute of the gates
-            counts = {
-                r["gate"]: r["n"]
-                for r in self.spark.read.parquet(self.path("silver", "gated"))
-                .groupBy("gate")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        n_total = int(sum(counts.values()))
-        self.audit.finish_run(run_id, started, rows_inserted=n_total)
-        return int(counts.get("keep", 0))
+            run.rows = counts["rows"]
+        return counts["keep"]
 
     def load_silver_deduped(self) -> int:
         """Exact dedup (content-fingerprint hash-agg, min doc_id kept)
@@ -333,8 +294,7 @@ class CorpusPipeline:
         only for candidate partners instead of storing a corpus-sized
         shingle table.  Appends survivors to silver/deduped and updates
         both indexes; returns per-fate counts."""
-        run_id, started = self.audit.start_run("increment", "silver", "deduped")
-        try:
+        with self.audit.run("increment", "silver", "deduped") as run:
             # localCheckpoint at stage boundaries: each stage is read
             # several times downstream (counts + two join consumers),
             # and the combined gates→LSH→CC→append lineage otherwise
@@ -425,25 +385,19 @@ class CorpusPipeline:
             # the next read
             silver_cols = self.read("silver", "deduped").columns
             added_cols = added.select(*silver_cols)
-            added_cols.write.mode("append").parquet(self.path("silver", "deduped"))
-            added.select("doc_id", "fp").write.mode("append").parquet(
-                self.path("silver", "index_fingerprints")
+            run.rows = self.write(added_cols, "silver", "deduped", mode="append")["rows"]
+            self.write(added.select("doc_id", "fp"), "silver", "index_fingerprints", mode="append")
+            self.write(
+                minhash_band_signatures(shingle_hash_table(added_cols)),
+                "silver", "index_band_sigs", mode="append",
             )
-            minhash_band_signatures(
-                shingle_hash_table(added_cols)
-            ).write.mode("append").parquet(self.path("silver", "index_band_sigs"))
-            n_added = added.count()
             new_sh.unpersist()
             new_sigs.unpersist()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n_added)
         return {
             "rejected": n_rejected,
             "dropped_exact": n_exact_dropped,
             "dropped_neardup": n_neardup_dropped,
-            "added": n_added,
+            "added": run.rows,
         }
 
     # ---------------------------------------------------------------- gold
@@ -508,8 +462,7 @@ class CorpusPipeline:
         packed = self.read("gold", "packed").withColumn(
             "seq_id", F.concat_ws(":", "lang", F.col("seq_no").cast("string"))
         )
-        run_id, started = self.audit.start_run("gold/packed", "gold", "shards")
-        try:
+        with self.audit.run("gold/packed", "gold", "shards") as run:
             manifest = export_training_shards(
                 packed,
                 self.path("gold", "shards"),
@@ -518,10 +471,7 @@ class CorpusPipeline:
                 epoch=epoch,
                 order_cols=["seq_offset", "doc_id"],
             )
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=manifest["n_rows"])
+            run.rows = manifest["n_rows"]
         return manifest
 
     def streaming_ingest(self, doc_stream: DataFrame, checkpoint: str):

@@ -16,13 +16,16 @@ its 9-table Olist schema:
 Every table is a Parquet full refresh (TRUNCATE+INSERT ⇒ overwrite,
 S5); facts read the just-written dim Parquet so SK joins see committed
 data (no cross-statement identity state — EP3 note in SURVEY §3).
+
+Each audit row's ``rows_inserted`` is the write's own observed count
+(the reference's ``@@ROWCOUNT``, 03_load_csv_to_bronze.sql:56-72), not
+a re-read: a table whose plan has no shuffle costs one Spark job.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.functions.cleansing import (
@@ -41,8 +44,8 @@ from olist_ecommerce_data_warehouse_spark.operators.surrogate import (
     add_surrogate_key,
     add_surrogate_key_simple,
 )
-from olist_ecommerce_data_warehouse_spark.sources.audit import AuditLog
-from olist_ecommerce_data_warehouse_spark.sources.csv import read_csv_bronze, write_table
+from olist_ecommerce_data_warehouse_spark.pipeline.store import LayerStore
+from olist_ecommerce_data_warehouse_spark.sources.csv import read_csv_bronze
 
 BRONZE_COLUMNS: dict[str, list[str]] = {
     "customers": [
@@ -85,35 +88,7 @@ SILVER_ORDER = [  # dependency order (05_sp_master_orchestrator_silver.sql:17-27
 ]
 
 
-class MedallionPipeline:
-    def __init__(self, spark: SparkSession, base_dir: str):
-        self.spark = spark
-        self.base = base_dir.rstrip("/")
-        self.audit = AuditLog(spark)
-
-    # ------------------------------------------------------------- plumbing
-
-    def path(self, layer: str, name: str) -> str:
-        return f"{self.base}/{layer}/{name}"
-
-    def read(self, layer: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, name))
-
-    def _audited_write(
-        self, df: DataFrame, layer: str, name: str, source_object: str = ""
-    ) -> int:
-        """C4: STARTED → write → SUCCESS(rows) / FAILED(error) + re-raise
-        (the TRY/CATCH + re-THROW of every reference SP)."""
-        run_id, started = self.audit.start_run(source_object or name, layer, name)
-        try:
-            write_table(df, self.path(layer, name))
-            n = self.spark.read.parquet(self.path(layer, name)).count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return n
-
+class MedallionPipeline(LayerStore):
     # ---------------------------------------------------------- EP1: bronze
 
     def ingest_bronze(
@@ -122,18 +97,12 @@ class MedallionPipeline:
         """The source read happens INSIDE the audit scope — a missing
         or unreadable file must leave a FAILED audit row, exactly like
         the reference's CATCH block (03_load_csv_to_bronze.sql:62-72)."""
-        run_id, started = self.audit.start_run(csv_path, "bronze", name, source_path=csv_path)
-        try:
+        with self.audit.run(csv_path, "bronze", name, source_path=csv_path) as run:
             df = read_csv_bronze(
                 self.spark, csv_path, BRONZE_COLUMNS[name], sep=sep, multi_line=multi_line
             )
-            write_table(df, self.path("bronze", name))
-            n = self.spark.read.parquet(self.path("bronze", name)).count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return n
+            run.rows = self.write(df, "bronze", name)["rows"]
+        return run.rows
 
     # ---------------------------------------------------------- EP2: silver
 

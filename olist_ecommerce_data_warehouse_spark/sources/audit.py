@@ -9,12 +9,19 @@ Spark has no SCOPE_IDENTITY; run_ids are assigned by the in-process
 one parquet append per terminal state, no read-modify-write (an
 UPDATE-free design that stays correct under concurrent writers at
 scale: the terminal row supersedes the STARTED row by (run_id, status)
-precedence)."""
+precedence).
+
+``rows_inserted`` is the write's own observed count — the analogue of
+the reference's ``@@ROWCOUNT`` of the load statement
+(03_load_csv_to_bronze.sql:56-72), taken by ``sources.csv.write_table``
+inside the write job — never a re-read of the written table."""
 
 from __future__ import annotations
 
 import datetime as dt
 import traceback
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +43,13 @@ AUDIT_SCHEMA = T.StructType(
         T.StructField("error_message", T.StringType()),
     ]
 )
+
+
+@dataclass
+class AuditRun:
+    """The open run inside :meth:`AuditLog.run`; the body sets ``rows``."""
+
+    rows: int | None = None
 
 
 @dataclass
@@ -79,6 +93,25 @@ class AuditLog:
             (run_id, base[1], base[2], base[3], base[4], base[5],
              started, ended, status, rows_inserted, msg)
         )
+
+    @contextmanager
+    def run(
+        self,
+        source_object: str,
+        target_schema: str,
+        target_table: str,
+        source_path: str = "",
+    ) -> Iterator[AuditRun]:
+        """C4: STARTED → body → SUCCESS(run.rows) / FAILED(error) +
+        re-raise (the TRY/CATCH + re-THROW of every reference SP)."""
+        run_id, started = self.start_run(source_object, target_schema, target_table, source_path)
+        run = AuditRun()
+        try:
+            yield run
+        except BaseException as e:
+            self.finish_run(run_id, started, error=e)
+            raise
+        self.finish_run(run_id, started, rows_inserted=run.rows)
 
     def to_df(self) -> DataFrame:
         return self.spark.createDataFrame(self.rows, AUDIT_SCHEMA)

@@ -14,7 +14,7 @@ repair becomes an in-engine ``regexp_replace`` (S3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,11 +66,27 @@ def strip_embedded_newlines(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def write_table(
+    df: DataFrame, path: str, partition_by: list[str] | None = None, *,
+    mode: str = "overwrite", **metrics: Column,
+) -> dict[str, int]:
     """S5: idempotent full-refresh sink (TRUNCATE+INSERT ⇒
     mode('overwrite')).  ``partition_by`` enables partition pruning on
-    date-key style columns for 100 TB fact tables."""
-    w = df.write.mode("overwrite")
+    date-key style columns for 100 TB fact tables.
+
+    Returns ``{"rows": n, **metrics}`` counted by the write job itself
+    (the reference's ``@@ROWCOUNT``, 03_load_csv_to_bronze.sql:56-72):
+    an ``Observation`` sits directly under the write, so its aggregates
+    land in the write's result stage, whose accumulator updates Spark
+    applies once per partition even when tasks retry.  Extra named
+    aggregates (e.g. ``keep=F.count_if(...)``) ride the same pass.  The
+    observation is read only after the write returns: a failed write
+    raises first, so neither a wait on it nor its partial count can
+    reach the caller."""
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in metrics.items()]
+    w = df.observe(obs, *aggs).write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    return obs.get

@@ -60,9 +60,13 @@ except ImportError:  # older commits
 def sweep_ivf_indexes():
     # bench.py's first-build hygiene (round 11), mirrored here so BOTH
     # A/B sides pay the IVF index build in every sample; older commits
-    # without clear_centroid_cache just get the dir sweep
+    # without clear_centroid_cache just get the dir sweep.  The side's
+    # .scratch is resolved from its package, as session.py::_REPO_ROOT
+    # is, not from the working directory
     import os, shutil
-    scratch = os.path.join(os.getcwd(), ".scratch")
+    import olist_ecommerce_data_warehouse_spark as pkg
+    root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+    scratch = os.path.join(root, ".scratch")
     if os.path.isdir(scratch):
         for n in os.listdir(scratch):
             if n.startswith("ivf_index_"):

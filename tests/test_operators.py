@@ -2229,7 +2229,14 @@ def test_spread_triggers_only_on_pathologically_narrow_input(spark):
     target = spark.sparkContext.defaultParallelism
     narrow = spark.range(100).coalesce(1)
     assert spread(narrow).rdd.getNumPartitions() == target
-    mid = spark.range(100).repartition(max(1, target // 2))
-    assert spread(mid).rdd.getNumPartitions() == max(1, target // 2)
+    # spread's rule keeps any width n with n * 2 >= target, so the
+    # narrowest width it leaves alone is ceil(target / 2) — also at odd
+    # widths, where target // 2 falls below half
+    half = -(-target // 2)
+    mid = spark.range(100).repartition(half)
+    assert spread(mid).rdd.getNumPartitions() == half
+    if half > 1:
+        below = spark.range(100).repartition(half - 1)
+        assert spread(below).rdd.getNumPartitions() == target
     wide = spark.range(100).repartition(target)
     assert spread(wide).rdd.getNumPartitions() == target

@@ -220,6 +220,85 @@ def test_fail_fast_records_failed_audit_row(spark, tmp_path):
     assert "FAILED" in statuses
 
 
+def assert_audit_matches_tables(spark, pipe) -> int:
+    """Every SUCCESS audit row's ``rows_inserted`` — the write's own
+    observed count — equals a re-read count of its table, and the
+    pipeline's schema-pinned read matches the schema inferred from the
+    files.  Increment rows count only their appended rows, so they are
+    skipped.  Returns the number of rows checked."""
+    rows = pipe.audit.to_df().filter("status = 'SUCCESS'").collect()
+    checked = 0
+    for r in rows:
+        if r["source_object"] == "increment":
+            continue
+        layer, name = r["target_schema"], r["target_table"]
+        on_disk = spark.read.parquet(pipe.path(layer, name))
+        assert r["rows_inserted"] == on_disk.count(), (layer, name)
+        assert pipe.read(layer, name).schema == on_disk.schema, (layer, name)
+        checked += 1
+    return checked
+
+
+def test_audit_rows_are_the_written_counts(pipeline, spark):
+    assert assert_audit_matches_tables(spark, pipeline) == 25  # 9 + 9 + 7 tables
+
+
+def test_failed_write_audits_failed_and_raises_promptly(spark, tmp_path):
+    """A write that dies mid-job leaves a FAILED row with no count and
+    re-raises at once: the row-count observation is read only after a
+    write returns, so a failed one neither waits on it nor records the
+    partial count it may hold."""
+    import threading
+
+    p = MedallionPipeline(spark, str(tmp_path / "wh"))
+    poisoned = spark.range(100).select(
+        "id",
+        F.when(F.col("id") == 42, F.raise_error(F.lit("poisoned row")))
+        .otherwise(F.lit(1))
+        .alias("x"),
+    )
+    outcome = {}
+
+    def attempt():
+        try:
+            p._audited_write(poisoned, "silver", "poisoned")
+        except Exception as e:
+            outcome["error"] = e
+
+    t = threading.Thread(target=attempt, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "failed write did not return"
+    assert "poisoned row" in str(outcome["error"])
+    assert [r[8] for r in p.audit.rows] == ["STARTED", "FAILED"]
+    assert p.audit.rows[-1][9] is None and "poisoned row" in p.audit.rows[-1][10]
+
+
+def test_one_spark_job_per_audited_write(spark, tmp_path):
+    """The audit count rides the write job: landing a CSV in bronze and
+    cleansing it into silver each run exactly one Spark job — no
+    re-read, no count, no schema-inference job on the bronze read."""
+    import uuid
+
+    raw = tmp_path / "customers.csv"
+    raw.write_text(CUSTOMERS_CSV, encoding="utf-8")
+    p = MedallionPipeline(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"audited-write-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(lambda: p.ingest_bronze("customers", str(raw))) == 1
+    assert jobs(p.load_silver_customers) == 1
+    assert p.audit.rows[-1][9] == 4
+
+
 def test_sql_entry_surface(spark):
     """SQL users can switch without the DataFrame API: registered views
     answer the reference's own QA queries (08_validacionsql.sql shapes)
@@ -380,6 +459,9 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path_factory):
         assert lm_rows.filter((F.col("lang") == lg) & (F.col("ppl_bucket") == "head")).count() > 0
     audit = pipe.audit.to_df().toPandas()
     assert ((audit["target_table"] == "lm_scored") & (audit["status"] == "SUCCESS")).any()
+    # every audited count is the written table's count; bronze,
+    # quarantine, gated, deduped + 2 indexes, 3 gold, shards, lm_scored
+    assert assert_audit_matches_tables(spark, pipe) == 11
 
     # data card: funnel totals reconcile with the stage outputs, and
     # per-(source,lang) doc counts shrink monotonically bronze→deduped
@@ -477,6 +559,10 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
     assert n1 == n0 + out["added"]
     # indexes track the corpus exactly
     assert pipe.read("silver", "index_fingerprints").count() == n1
+    # appends keep the schema-pinned reads equal to the files' schema
+    for name in ("deduped", "index_fingerprints", "index_band_sigs"):
+        inferred = spark.read.parquet(pipe.path("silver", name)).schema
+        assert pipe.read("silver", name).schema == inferred, name
     # replayed drop under new ids: everything is now history
     inc2 = inc.select(
         (F.col("doc_id") + 1000).alias("doc_id"), "text", "lang", "source"
@@ -486,6 +572,27 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
     assert pipe.read("silver", "deduped").count() == n1
     audit = pipe.audit.to_df().toPandas()
     assert (audit["status"] == "FAILED").sum() == 0
+
+
+def test_corpus_clean_jsonl_audits_empty_quarantine(spark, tmp_path):
+    """No corrupt lines: bronze/quarantine is still written and audited,
+    with the observed count 0."""
+    import json
+
+    from olist_ecommerce_data_warehouse_spark.pipeline.corpus import CorpusPipeline
+
+    src = tmp_path / "clean.jsonl"
+    src.write_text(
+        "\n".join(
+            json.dumps({"doc_id": i, "text": f"document number {i}", "lang": "en", "source": "t"})
+            for i in range(5)
+        )
+    )
+    pipe = CorpusPipeline(spark, str(tmp_path / "wh"))
+    assert pipe.ingest_bronze(str(src)) == {"documents": 5, "quarantined": 0}
+    audit = {r[4]: r for r in pipe.audit.rows if r[8] == "SUCCESS"}
+    assert audit["quarantine"][9] == 0 and audit["documents"][9] == 5
+    assert assert_audit_matches_tables(spark, pipe) == 2
 
 
 def test_corpus_sql_views(spark):
