@@ -1,12 +1,14 @@
-"""Capture `explain("formatted")` snapshots for optimization round 11.
+"""Capture `explain("formatted")` snapshots for an optimization round.
 
-    python scripts/r11_plans.py before q1 q2 ...
-    python scripts/r11_plans.py after  q1 q2 ...
+    python scripts/explain_plans.py <round> before q1 q2 ...
+    python scripts/explain_plans.py <round> after  q1 q2 ...
 
-Writes plans/r11/<query>_<tag>.txt — the committed evidence the
-optimization deliverable requires.  Output is the full formatted plan,
-capped at 400 lines (the iterative plans unroll megabytes of lineage;
-the shape claims live in the first segment)."""
+Writes plans/<round>/<query>_<tag>.txt — the committed evidence the
+optimization deliverable requires (e.g. ``r11`` → plans/r11/).  Plans
+are built over the smoke tier (``__spark_entry__.SMOKE_SF_DIR``).
+Output is the full formatted plan, capped at 400 lines (the iterative
+plans unroll megabytes of lineage; the shape claims live in the first
+segment)."""
 
 from __future__ import annotations
 
@@ -18,21 +20,21 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-SF = "/root/testdata/sf0.001"
 CAP = 400
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    round_name, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
+    from __spark_entry__ import SMOKE_SF_DIR
     from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
     from olist_ecommerce_data_warehouse_spark.session import get_spark
 
-    out_dir = REPO / "plans" / "r11"
+    out_dir = REPO / "plans" / round_name
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("r11_plans", cpus=8)
+    spark = get_spark(f"{round_name}_plans", cpus=8)
     for name in names:
-        df = REGISTRY[name].fn(spark, SF)
+        df = REGISTRY[name].fn(spark, SMOKE_SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")

@@ -32,14 +32,6 @@ def test_decode_metadata_deterministic(spark, media):
         assert row["n_channels"] in (1, 3)
 
 
-def test_decode_real_path_is_marked_stub(spark, media):
-    with pytest.raises(Exception) as ei:
-        decode_media(media, real_decode=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
-
-
 def test_frame_sampling_reassembles_prefix(spark, media):
     frames = sample_frames(media, n_frames=4)
     got = frames.groupBy("media_id").agg(
@@ -55,6 +47,40 @@ def test_frame_sampling_reassembles_prefix(spark, media):
     # frame bytes are the actual payload slices
     one = frames.filter(F.col("frame_no") == 0).first()
     assert bytes(one["frame_bytes"]) == bytes(videos[one["media_id"]])[: len(one["frame_bytes"])]
+
+
+def test_multimodal_metadata_empty_residue_classes(spark, tmp_path):
+    """A documents table holding only ids with doc_id % 8 IN (0, 5)
+    leaves most CODECS residue classes empty.  The plan must still
+    hash-match its oracle there: the oracle's global aggregates give
+    each empty fixed kind n_media = 0 and NULL sums (0 for probe:ogg's
+    COUNT-derived page/packet totals), and the plan gets the same rows
+    from its skeleton.  Dropping the skeleton loses those kinds."""
+    import duckdb
+
+    from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
+    from tests.conftest import assert_matches_oracle
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    spec = REGISTRY["multimodal_metadata"]
+    with duckdb.connect() as con:
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{SF_DIR}/documents.parquet') "
+            f"WHERE doc_id % 8 IN (0, 5)) TO '{sf}/documents.parquet' (FORMAT parquet)"
+        )
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+        )
+        got = spec.fn(spark, str(sf))
+        assert_matches_oracle(got, con, spec.oracle, "multimodal_metadata")
+    empty = {
+        r["kind"]
+        for r in got.filter(
+            "metric = 'n_media' AND value = 0 AND kind LIKE 'decode:%'"
+        ).collect()
+    }
+    assert {"decode:wav", "decode:flac", "decode:jpeg420"} <= empty, empty
 
 
 def _encode_png(pixels: list[list[tuple[int, int, int]]], filters: list[int]) -> bytes:
@@ -1196,45 +1222,35 @@ def test_png_sub8_interlace_decodes():
         _png_pixels(bad)
 
 
-def test_mp4_stbl_walk_exact(spark):
+def test_mp4_stbl_walk_exact():
     """Round 8: the sample-table walk recovers every known quantity —
     stsz count + size sum, stco count + offset sum, ALL stts runs, and
     the run-length stsc resolution (which must agree with the stsz
     count on a consistent file)."""
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
+        CODECS,
         _mp4_stbl_fields,
-        _synth_mp4_stbl_bytes,
-        mp4_sample_tables,
-        synthesize_mp4_stbls,
     )
 
-    ids = [7, 15, 23, 31, 39, 55, 103]
-    docs = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
-    got = {
-        r["media_id"]: r
-        for r in mp4_sample_tables(synthesize_mp4_stbls(docs)).collect()
-    }
-    assert set(got) == set(ids)
-    for mid in ids:
+    codec = CODECS["probe:mp4-stbl"]
+    for mid in [7, 15, 23, 31, 39, 55, 103]:
         n, sizes, spc, nc, n1, d1, d2, offsets = _mp4_stbl_fields(mid)
-        r = got[mid]
-        assert r["n_samples"] == n
-        assert r["sum_sample_bytes"] == sum(sizes)
-        assert r["n_chunks"] == nc
-        assert r["duration"] == n1 * d1 + (n - n1) * d2
-        assert r["sum_offsets"] == sum(offsets)
-        assert r["stsc_samples"] == n  # run-length resolution closes
+        got = dict(zip(codec.metrics, codec.measure(codec.synth(mid))))
+        assert got["sum_samples"] == n
+        assert got["sum_sample_bytes"] == sum(sizes)
+        assert got["sum_chunks"] == nc
+        assert got["sum_duration"] == n1 * d1 + (n - n1) * d2
+        assert got["sum_offsets"] == sum(offsets)
+        assert got["sum_stsc_samples"] == n  # run-length resolution closes
 
 
-def test_mp4_stbl_uniform_stsz(spark):
+def test_mp4_stbl_uniform_stsz():
     """The uniform-size stsz form (sample_size != 0, NO size list) is
     a distinct spec path — the walk must multiply, not read absent
     entries."""
     import struct
 
-    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        mp4_sample_tables,
-    )
+    from olist_ecommerce_data_warehouse_spark.operators.multimodal import CODECS
 
     def box(btype, payload):
         return struct.pack(">I", len(payload) + 8) + btype + payload
@@ -1251,14 +1267,14 @@ def test_mp4_stbl_uniform_stsz(spark):
         b"moov",
         box(b"trak", box(b"mdia", box(b"minf", box(b"stbl", stbl)))),
     )
-    media = spark.createDataFrame([(1, bytearray(b))], "media_id bigint, payload binary")
-    r = mp4_sample_tables(media).collect()[0]
-    assert r["n_samples"] == 5
+    codec = CODECS["probe:mp4-stbl"]
+    r = dict(zip(codec.metrics, codec.measure(b)))
+    assert r["sum_samples"] == 5
     assert r["sum_sample_bytes"] == 240
-    assert r["n_chunks"] == 3
+    assert r["sum_chunks"] == 3
     assert r["sum_offsets"] == 600
-    assert r["duration"] == 50
-    assert r["stsc_samples"] == 6  # 3 chunks x 2 — a real (padded) resolution
+    assert r["sum_duration"] == 50
+    assert r["sum_stsc_samples"] == 6  # 3 chunks x 2 — a real (padded) resolution
 
 
 def test_jpeg_multiscan_sequential_raises():
